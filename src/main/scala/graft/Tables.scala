@@ -18,7 +18,9 @@ object Tables {
 
   /** Idempotent session defaults. AQE handles runtime re-planning (skew
     * joins, partition coalescing) — the knobs that matter at 1000-executor
-    * scale and are harmless on local[32].
+    * scale and are harmless on local[32]. Also the engine's one session
+    * bootstrap: [[graft.functions.GraftExtensions.install]] adds its default
+    * optimizer rules, planner strategies and SQL functions.
     */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
@@ -29,7 +31,23 @@ object Tables {
     // events.parquet carries TIMESTAMP(NANOS), which Spark's vectorized
     // reader rejects; read the raw int64 and convert in `apply`.
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.functions.GraftExtensions.install(spark)
     spark
+  }
+
+  /** The entry points' local session: `cores` task slots and as many
+    * shuffle partitions (a caller that wants another count sets it on the
+    * returned session), no UI, WARN logging, [[tune]]d.
+    */
+  def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
   }
 
   /** Load one table, normalizing `events.ts` to a session-zone TIMESTAMP

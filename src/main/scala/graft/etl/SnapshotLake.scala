@@ -866,10 +866,9 @@ object SnapshotLake {
           "passes) — bind the timestamp to a literal upstream")
       val castStr = expr(s"cast(`$partitionCol` as string)")
       val routeKey = concat(lit("h"), hex(castStr))
-      // bounded collect: one row per partition that CONTAINS an updated row
-      val affected = hits
-        .select(castStr.as("__v"), routeKey.as("__h")).distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
+      // one row per partition that CONTAINS an updated row
+      val affected = affectedPartitions(spark, hits, castStr, routeKey,
+        "UPDATE", partitionCol)
       if (affected.isEmpty) 0L
       else {
         val affectedValues = affected.map(_._1).toSet
@@ -983,6 +982,33 @@ object SnapshotLake {
       .select((keys.map(col) ++ image :+ col("_change_type")): _*)
   }
 
+  /** `graft.lake.maxAffectedPartitions`: the most distinct partition values
+    * one commit may touch. The lake contract partitions by low-cardinality
+    * columns, so more is a mis-partitioned table (or a wrong partitionCol).
+    */
+  private def maxAffectedPartitions(spark: SparkSession): Int =
+    spark.conf.getOption("graft.lake.maxAffectedPartitions")
+      .map(_.toInt).getOrElse(100000)
+
+  /** The distinct (value, route key) pairs of the partitions `hits` rows
+    * fall in, fetched BOUNDED: at most `maxAffected + 1` rows ever reach
+    * the driver, and one past the bound fails the verb before anything is
+    * staged or published.
+    */
+  private def affectedPartitions(spark: SparkSession, hits: DataFrame,
+      castStr: Column, routeKey: Column, verb: String,
+      partitionCol: String): Array[(String, String)] = {
+    val maxAffected = maxAffectedPartitions(spark)
+    val affected = hits.select(castStr.as("__v"), routeKey.as("__h")).distinct()
+      .take(maxAffected + 1).map(r => (r.getString(0), r.getString(1)))
+    require(affected.length <= maxAffected,
+      s"$verb touches more than $maxAffected distinct $partitionCol values " +
+        "— the per-partition rewrite protocol is built for low-cardinality " +
+        "partitioning; repartition the table or raise " +
+        "graft.lake.maxAffectedPartitions")
+    affected
+  }
+
   /** True when any expression in the plan reads evaluation-time — the
     * family `ComputeCurrentTime` substitutes once per EXECUTION
     * (current_timestamp/now/localtimestamp/current_date). Catalyst marks
@@ -1042,10 +1068,9 @@ object SnapshotLake {
           "(now()/current_timestamp()/current_date() are substituted per " +
           "execution and the predicate runs in independent passes) — bind " +
           "the cutoff to a literal timestamp upstream")
-      // bounded collect: one row per partition that LOSES a row
-      val affected = hits
-        .select(castStr.as("__v"), routeKey.as("__h")).distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
+      // one row per partition that LOSES a row
+      val affected = affectedPartitions(spark, hits, castStr, routeKey,
+        "delete", partitionCol)
       if (affected.isEmpty) 0L
       else {
         val affectedValues = affected.map(_._1).toSet
@@ -1136,8 +1161,7 @@ object SnapshotLake {
     // add a single-partition exchange to EVERY commit's affected-value job
     // (measured on the 10× lake verbs), while the collect of value strings
     // stays small until the table is already far outside the contract.
-    val maxAffected = spark.conf.getOption("graft.lake.maxAffectedPartitions")
-      .map(_.toInt).getOrElse(100000)
+    val maxAffected = maxAffectedPartitions(spark)
     val affected = affectedSrc
       .select(castStr.as("__v"), routeKey.as("__h")).distinct()
       .collect().map(r => (r.getString(0), r.getString(1)))

@@ -67,10 +67,11 @@ case class BloomMightContainString(bloom: Broadcast[BloomFilter], child: Express
 
 object BloomExpressions {
   /** Register a session function binding `bloom` and return its name — the
-    * [[VectorExpressions.register]] deployment shape, parameterized by the
-    * broadcast handle (the sketch is a runtime object, so each filter gets
-    * its own id-suffixed function; registrations are a registry entry each,
-    * and re-registering the same broadcast is idempotent).
+    * shape of the session functions in [[GraftExtensions.functions]],
+    * parameterized by the broadcast handle (the sketch is a runtime object,
+    * so each filter gets its own id-suffixed function; registrations are a
+    * registry entry each, and re-registering the same broadcast is
+    * idempotent).
     */
   def registerProbe(spark: SparkSession, bloom: Broadcast[BloomFilter]): String = {
     val name = s"graft_bloom_b${bloom.id}"

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -51,81 +50,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorExpressions {
-  /** Register `cosine_sim(a, b)` for SQL/expr use on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-}
-
-/** Library-style Catalyst integration: enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` and every session
-  * gets the engine's native functions in SQL without any imperative
-  * registration call — the standard deployment shape for a Spark library.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[CosineSimilarity].getName, "cosine_sim"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          CosineSimilarity(exprs(0), exprs(1))))
-    // keyless bounded-range joins (ts BETWEEN base ± literal) rewrite to the
-    // binned equi-join shape instead of a nested loop — see
-    // graft.plans.RangeJoinBinningRule
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinBinningRule)
-    // native point-in-time join: the asof_match marker, its rewrite rule,
-    // and the physical operator — see graft.plans.AsOfJoin
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.plans.AsOfJoin.FunctionName),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.plans.AsOfMatch].getName, graft.plans.AsOfJoin.FunctionName),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.plans.AsOfMatch.fromArgs(exprs)))
-    ext.injectOptimizerRule(_ => graft.plans.AsOfJoinRule)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // match-then-filter escape hatch for LEFT as-ofs — see
-    // graft.plans.PushdownBarrier / AsOfJoin.postFilter
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier(
-        graft.plans.AsOfJoin.BarrierFunctionName),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.plans.PushdownBarrier].getName,
-          graft.plans.AsOfJoin.BarrierFunctionName),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.plans.PushdownBarrier(exprs.head)))
-    // global row_number()/ntile() windows over unbounded input rewrite to
-    // the distributed two-pass rank instead of a single-partition Window —
-    // see graft.plans.GlobalRankRule
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRankRule)
-    // global RANGE n PRECEDING sliding sums/counts rewrite to the
-    // ghost-probe composition (whose inner running window the rule above
-    // then distributes) — see graft.plans.RangeSlidingRule
-    ext.injectOptimizerRule(_ => graft.plans.RangeSlidingRule)
-    // global RANGE-frame min/max (no inverse) rewrite to the sparse-block
-    // decomposition — see graft.plans.RangeMinMaxRule
-    ext.injectOptimizerRule(_ => graft.plans.RangeMinMaxRule)
-    // ROWS frames with FOLLOWING ends re-express as RANGE over
-    // row_number() — see graft.plans.RowsFollowingRule
-    ext.injectOptimizerRule(_ => graft.plans.RowsFollowingRule)
-    // DESC / NULLS LAST global orders canonicalize to ASC NULLS FIRST so
-    // the rules above fire on "latest-first" SQL — see
-    // graft.plans.DescOrderRule
-    ext.injectOptimizerRule(_ => graft.plans.DescOrderRule)
-    // suffix frames (CURRENT ROW .. UNBOUNDED FOLLOWING) reverse into
-    // running prefixes over the reversed order — see
-    // graft.plans.SuffixFrameRule
-    ext.injectOptimizerRule(_ => graft.plans.SuffixFrameRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
-    // OPT-IN analyzer-time cost lint (spark.graft.lint.centeredRows=true):
-    // warns, at plan time, on the multi-family centered-ROWS shape the
-    // rules above execute correctly but expensively, naming the
-    // RangeWindows.rowsSlidingAll remediation — see
-    // graft.plans.CenteredRowsLintRule
-    ext.injectPostHocResolutionRule(session =>
-      graft.plans.CenteredRowsLintRule(session))
-  }
 }

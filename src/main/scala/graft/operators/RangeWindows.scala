@@ -80,7 +80,7 @@ object RangeWindows {
       outPrefix: String = "frame"): DataFrame = {
     require(w >= 0L && w < Long.MaxValue,
       s"frame width must be in [0, Long.MaxValue), got $w")
-    graft.plans.GlobalRank.ensureRegistered(df.sparkSession)
+    graft.functions.GraftExtensions.install(df.sparkSession)
     val vType = df.schema(valueCol).dataType
     require(vType.isInstanceOf[org.apache.spark.sql.types.DecimalType],
       s"value column '$valueCol' must be DECIMAL for exact frame " +
@@ -192,7 +192,7 @@ object RangeWindows {
       outPrefix: String = "frame"): DataFrame = {
     require(w >= 0L && w < Long.MaxValue,
       s"frame width must be in [0, Long.MaxValue), got $w")
-    graft.plans.GlobalRank.ensureRegistered(df.sparkSession)
+    graft.functions.GraftExtensions.install(df.sparkSession)
     val vType = df.schema(valueCol).dataType
     require(vType == org.apache.spark.sql.types.DoubleType ||
       vType == org.apache.spark.sql.types.FloatType,
@@ -247,7 +247,7 @@ object RangeWindows {
     require(before >= 0L && before < Long.MaxValue,
       s"frame start must be in [0, Long.MaxValue) PRECEDING, got $before")
     require(after >= 0L, s"frame end must be >= 0 FOLLOWING, got $after")
-    graft.plans.GlobalRank.ensureRegistered(df.sparkSession)
+    graft.functions.GraftExtensions.install(df.sparkSession)
     val vType = df.schema(valueCol).dataType
     require(vType.isInstanceOf[org.apache.spark.sql.types.DecimalType],
       s"value column '$valueCol' must be DECIMAL, got ${vType.simpleString}")
@@ -511,7 +511,7 @@ object RangeWindows {
       "in-exec trailing family — use a plain window")
     require(n >= 0 && n + m + 1 <= 1024,
       s"frame length ${n + m + 1} exceeds the boundary-ring bound (1024)")
-    graft.plans.GlobalRank.ensureRegistered(df.sparkSession)
+    graft.functions.GraftExtensions.install(df.sparkSession)
     import org.apache.spark.sql.types.DecimalType
     require(df.schema(sumCol).dataType.isInstanceOf[DecimalType],
       s"$sumCol must be DECIMAL — fp retract accumulators cancel " +

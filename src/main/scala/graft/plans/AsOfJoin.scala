@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{coalesce, explode, expr, lit, pmod}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
@@ -39,11 +39,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   *   - emits at most one output row per left row (LEFT OUTER) — the join
   *     NEVER inflates, so downstream cardinality is known at plan time.
   *
-  * Deployment mirrors the engine's other Catalyst extensions
-  * ([[RangeJoinBinningRule]]): session-scoped via
-  * [[AsOfJoin.ensureRegistered]] (experimental.extraOptimizations +
-  * extraStrategies + the `asof_match` function), or cluster-wide via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Deployment is the engine's one session list
+  * ([[graft.functions.GraftExtensions]]): the rule, the strategy and the
+  * `asof_match` function are installed by `Tables.tune`, or cluster-wide
+  * via `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * The full pandas-`merge_asof`/QuestDB-style family is supported through
   * the marker's optional literal args
@@ -523,7 +522,7 @@ object AsOfJoin {
     * documented on [[AsOfMatch]], spec-pinned in AsOfJoinSpec.
     */
   def postFilter(joined: DataFrame, cond: Column): DataFrame = {
-    ensureRegistered(joined.sparkSession)
+    graft.functions.GraftExtensions.install(joined.sparkSession)
     joined.where(org.apache.spark.sql.functions.call_function(
       BarrierFunctionName, cond))
   }
@@ -562,7 +561,7 @@ object AsOfJoin {
     require(keys.nonEmpty, "salted as-of needs at least one equi-key")
     require(Set("left", "left_outer", "inner").contains(joinType),
       s"as-of joins support left/inner, got $joinType")
-    ensureRegistered(probe.sparkSession)
+    graft.functions.GraftExtensions.install(probe.sparkSession)
     val saltP = "__asof_salt_p"
     val saltR = "__asof_salt_r"
     val p = probe.withColumn(saltP,
@@ -572,17 +571,5 @@ object AsOfJoin {
     val cond = (keys.map { case (pk, rk) => p(pk) === r(rk) } :+
       (p(saltP) === r(saltR)) :+ expr(matchExpr)).reduce(_ && _)
     p.join(r, cond, joinType).drop(saltP, saltR)
-  }
-
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, AsOfMatch.fromArgs, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BarrierFunctionName, exprs => PushdownBarrier(exprs.head), "scala_udf")
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(AsOfJoinRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ AsOfJoinRule
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
   }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Attribute, AttributeSet, Cast, CumeDist, CurrentRow, DenseRank,
@@ -231,9 +230,9 @@ case class GlobalRankNode(
   */
 object GlobalRankRule extends Rule[LogicalPlan] {
 
-  /** Runtime kill-switch: registration (`ensureRegistered` / extensions)
-    * is session-wide and permanent, so comparators that must measure
-    * Spark's STOCK single-partition Window — twin gates, independence
+  /** Runtime kill-switch: installation (`GraftExtensions.install`, run by
+    * `Tables.tune`, or the extensions) is session-wide and permanent, so
+    * comparators that must measure Spark's STOCK single-partition Window — twin gates, independence
     * checks — can disable the rewrite for one evaluation via
     * `spark.conf.set(EnabledKey, "false")` / try-finally, instead of the
     * per-site bounded-input idiom.
@@ -1481,41 +1480,5 @@ object GlobalRankExec {
     val fat = bucketSize + 1
     val cut = rem * fat
     (if (idx < cut) idx / fat else rem + (idx - cut) / bucketSize).toInt + 1
-  }
-}
-
-/** Session-scoped deployment (the [[AsOfJoin.ensureRegistered]] idiom;
-  * idempotent), or cluster-wide via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-object GlobalRank {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(GlobalRankRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ GlobalRankRule
-    // RangeSlidingRule rides the same fixed-point batch: it rewrites the
-    // RANGE n PRECEDING cliff into a composition whose inner running
-    // window GlobalRankRule then distributes on the next iteration
-    if (!exp.extraOptimizations.contains(RangeSlidingRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RangeSlidingRule
-    // sliding RANGE min/max have no inverse — they ride the sparse-block
-    // decomposition instead (partitioned windows only, no cliff)
-    if (!exp.extraOptimizations.contains(RangeMinMaxRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RangeMinMaxRule
-    // ROWS frames with FOLLOWING ends re-express as RANGE over
-    // row_number() — food for all three rules above on the same batch
-    if (!exp.extraOptimizations.contains(RowsFollowingRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RowsFollowingRule
-    // DESC / NULLS LAST global orders canonicalize to ASC NULLS FIRST
-    // (bitwise-NOT key + null-segregation key) — "latest-first" SQL
-    // becomes food for all the rules above on the same batch
-    if (!exp.extraOptimizations.contains(DescOrderRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ DescOrderRule
-    // SUFFIX frames (CURRENT ROW .. UNBOUNDED FOLLOWING) reverse into
-    // running prefixes over the reversed order — GlobalRankRule food
-    if (!exp.extraOptimizations.contains(SuffixFrameRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ SuffixFrameRule
-    if (!exp.extraStrategies.contains(GlobalRankStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ GlobalRankStrategy
   }
 }

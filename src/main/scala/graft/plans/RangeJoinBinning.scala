@@ -38,9 +38,11 @@ import org.apache.spark.unsafe.types.CalendarInterval
   *    `(t - pmod(t, W)) div W` (pmod is non-negative, the numerator is an
   *    exact multiple of W, so truncating division IS floor division).
   *
-  * Registered via [[graft.functions.GraftExtensions]] (the
-  * `spark.sql.extensions` deployment path) and usable per-session through
-  * `spark.experimental.extraOptimizations`.
+  * Extension-only: injected by [[graft.functions.GraftExtensions]] (the
+  * `spark.sql.extensions` deployment path) but NOT in its default list
+  * that `Tables.tune` installs — the rule has no kill-switch, and its spec
+  * gets the nested-loop baseline by leaving it out. Usable per-session
+  * through `spark.experimental.extraOptimizations`.
   */
 object RangeJoinBinningRule extends Rule[LogicalPlan] with PredicateHelper {
 

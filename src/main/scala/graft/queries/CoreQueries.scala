@@ -287,7 +287,7 @@ object CoreQueries {
 
   /** E3g — `MERGE INTO` through the lake's SQL face: the idiomatic
     * lakehouse verb for "upsert this staging table".
-    * [[graft.sources.LakeMergeStrategy]] (auto-registered by the catalog)
+    * [[graft.sources.LakeMergeStrategy]] (a default session strategy)
     * intercepts the analyzed plan — stock Spark refuses MERGE for any
     * table without row-level ops — validates the ON keys against the
     * lake's persisted merge contract, and routes the source through the
@@ -804,7 +804,7 @@ object CoreQueries {
     * double arithmetic is bit-identical to the oracle's. Built-in `corr`
     * would not match (float accumulation order).
     *
-    * Cost note (measured, `tools/ProfileMisc`): the runtime is the
+    * Cost note (measured in round 15): the runtime is the
     * pairs×shared-days product stream through the decimal aggregation —
     * inherent to exact pairwise stats — PLUS, until round 15, a second
     * full events scan+aggregate: the pushed-down watchlist filter makes
@@ -822,8 +822,8 @@ object CoreQueries {
       graft.dedup.DedupQueries.materialize(dailyCloses(s, dir), "e7_daily"))
 
   /** E7 core over an arbitrary per-(user_id, day, close) frame — exposed so
-    * the profiling harness measures the PRODUCTION body under different
-    * input materializations instead of a hand-copied reformulation.
+    * callers (and specs) run the PRODUCTION body over their own input
+    * materialization instead of a hand-copied reformulation.
     *
     * `watchlistCap` is the EXPLICIT quadratic-bound contract: the pair
     * cardinality this query streams is `watchlistCap × universe`, so the
@@ -1321,7 +1321,6 @@ object CoreQueries {
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
 
   def a13bAsofJoinNative(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsOfJoin.ensureRegistered(s)
     val ev = t(s, dir, "events")
     val purchases = asofPurchases(ev)
     val clicks = asofClicks(ev)
@@ -1346,7 +1345,6 @@ object CoreQueries {
     * subqueries over the window — two unrelated formulations, one hash.
     */
   def a13cAsofJoinForwardTol(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsOfJoin.ensureRegistered(s)
     val ev = t(s, dir, "events")
     val purchases = asofPurchases(ev)
     val clicks = asofClicks(ev)
@@ -1372,7 +1370,6 @@ object CoreQueries {
     * by (|Δts|, backward-first) — two unrelated formulations, one hash.
     */
   def a13dAsofNearest(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsOfJoin.ensureRegistered(s)
     val ev = t(s, dir, "events")
     val purchases = asofPurchases(ev)
     val clicks = asofClicks(ev)
@@ -1400,7 +1397,6 @@ object CoreQueries {
     * then the native as-of exec.
     */
   def a13eTemporalJoinClosed(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsOfJoin.ensureRegistered(s)
     val ev = t(s, dir, "events")
     val wm = ev.agg((max(col("ts")) - expr("INTERVAL 2 DAYS")).as("wm"))
     val purchases = asofPurchases(ev)
@@ -1973,7 +1969,6 @@ object CoreQueries {
     * PlanSpec pins that the plan carries GlobalRank and NO Window.
     */
   def c8bCurriculumBinsSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "documents").select(
         col("doc_id"), col("n_chars"), col("lang"), col("source"))
       .createOrReplaceTempView("c8b_documents")
@@ -2003,7 +1998,6 @@ object CoreQueries {
     * output DOUBLE (§oracle-parity rules).
     */
   def e15RunningTotalSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e15_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2020,7 +2014,6 @@ object CoreQueries {
     * native window engine.
     */
   def e16RunningMinmaxSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e16_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2045,7 +2038,6 @@ object CoreQueries {
     * reads, no arithmetic at all.
     */
   def e18FirstLastSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e18_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2090,7 +2082,6 @@ object CoreQueries {
     * oracle discipline as e19.
     */
   def e19bRangeSlidingSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e19b_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2117,7 +2108,6 @@ object CoreQueries {
     * it in HUGEINT unit arithmetic like e18's.
     */
   def e19cRangeAvgSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e19c_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2159,7 +2149,6 @@ object CoreQueries {
     * probe at k + 3) — no library call, no cliff.
     */
   def e20bRangeMinmaxSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e20b_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2202,7 +2191,6 @@ object CoreQueries {
     * HUGEINT units (the e18/e19c discipline).
     */
   def e21bRangeCenteredSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e21b_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2234,7 +2222,6 @@ object CoreQueries {
     * products at decimal(28,2), prefix sums exact in both engines.
     */
   def e22RunningCovarSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e22_orders")
     s.sql(
       """WITH o AS (
@@ -2325,7 +2312,6 @@ object CoreQueries {
     * native RANGE window engine on the identical DESC order.
     */
   def e24DescSlidingSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e24_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2398,7 +2384,6 @@ object CoreQueries {
     * engine on the identical suffix-frame text.
     */
   def e25SuffixFramesSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e25_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2428,7 +2413,6 @@ object CoreQueries {
     * drift from the stock recompute-per-frame semantics).
     */
   def e17MovingTotalSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "orders").createOrReplaceTempView("e17_orders")
     s.sql(
       """SELECT o_orderkey,
@@ -2454,7 +2438,6 @@ object CoreQueries {
     * bit-stable.
     */
   def c8cCumeDistSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GlobalRank.ensureRegistered(s)
     t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       .createOrReplaceTempView("c8c_documents")
     s.sql(

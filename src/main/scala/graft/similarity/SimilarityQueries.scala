@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{TopKAggregator, VectorExpressions}
+import graft.functions.TopKAggregator
 
 /** Similarity search over the `embeddings` table (vec_id, array<float> 64-d,
   * label).
@@ -32,7 +32,6 @@ object SimilarityQueries {
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
 
   private def withCosine(df: DataFrame, a: String, b: String): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
     df.withColumn("cosine", expr(s"cosine_sim($a, $b)"))
   }
 

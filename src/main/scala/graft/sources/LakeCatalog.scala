@@ -96,8 +96,8 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
   private def parquetTable(ident: Identifier, m: SnapshotLake.Manifest,
       path: String): Table = {
     // any session that resolves a lake table can MERGE INTO it — the
-    // strategy registry is the session's, so stamp it here (idempotent)
-    LakeMergeExec.ensureRegistered(spark)
+    // strategy registry is the session's, so install it here (idempotent)
+    graft.functions.GraftExtensions.install(spark)
     new LakeTable(ident.name(), path, m, spark)
   }
 

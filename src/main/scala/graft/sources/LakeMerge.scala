@@ -24,8 +24,8 @@ import graft.etl.SnapshotLake
   * Stock Spark refuses the statement at PLANNING for any table that does
   * not implement row-level operations (`SparkStrategies.BasicOperators`
   * throws UNSUPPORTED_FEATURE.TABLE_OPERATION), so this strategy — tried
-  * BEFORE the built-ins via `experimental.extraStrategies`, registered
-  * automatically by [[LakeCatalog.loadTable]] — intercepts the analyzed
+  * BEFORE the built-ins via `experimental.extraStrategies`, installed by
+  * `Tables.tune` and by [[LakeCatalog.loadTable]] — intercepts the analyzed
   * [[MergeIntoTable]] over a [[LakeTable]] and routes it into the lake's
   * own keyed LWW commit machinery:
   *
@@ -387,19 +387,4 @@ object LakeMergeExec {
   case object InsertOnly extends Mode
   case object DeleteKeys extends Mode
   case object SyncOnly extends Mode
-
-  /** Idempotent session registration (the GlobalRank idiom); done
-    * automatically whenever [[LakeCatalog]] resolves a table, so any
-    * session with a lake catalog speaks MERGE INTO.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    // check-and-append under a lock: extraStrategies is a plain var, and
-    // two concurrent table loads (or a load racing another extension)
-    // would otherwise lose one of the read-modify-write appends
-    exp.synchronized {
-      if (!exp.extraStrategies.contains(LakeMergeStrategy))
-        exp.extraStrategies = exp.extraStrategies :+ LakeMergeStrategy
-    }
-  }
 }

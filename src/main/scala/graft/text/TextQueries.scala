@@ -407,10 +407,11 @@ object TextQueries {
   def t14VocabCoverage(s: SparkSession, dir: String, vocabSize: Int = 256): DataFrame = {
     val toks = t(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    // Top-`vocabSize` cut via the salt-bucketed pre-cut ([[globalTopK]]):
-    // same (n DESC, term ASC) total order as the direct row_number window
-    // it replaces, so the selected vocabulary is identical — but the
-    // global sort now sees ≤ buckets × k rows, never the whole distinct-
+    // Top-`vocabSize` cut via [[globalTopK]] (orderBy + limit, planned as
+    // TakeOrderedAndProject): same (n DESC, term ASC) total order as the
+    // direct row_number window it replaces, so the selected vocabulary is
+    // identical — but each partition keeps only its k best rows and the
+    // final merge sees ≤ partitions × k rows, never the whole distinct-
     // term table.
     val vocab = globalTopK(
       toks.groupBy(col("term")).agg(count(lit(1)).as("n")),

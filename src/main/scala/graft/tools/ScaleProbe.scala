@@ -53,14 +53,7 @@ object ReplicaGen {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val n = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.Tables.session(32)
     Replicas.build(spark, base, work, n)
     spark.stop()
   }
@@ -76,14 +69,8 @@ object ScaleProbe {
     val base = "/root/testdata/sf0.1"
     val n = if (args.nonEmpty) args(0).toInt else 10
     val work = "/tmp/graft_scale10"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.Tables.session(32)
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     Replicas.build(spark, base, work, n)
 
     def time(fn: (SparkSession, String) => DataFrame, dir: String): Double = {

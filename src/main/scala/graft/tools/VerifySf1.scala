@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,14 +43,7 @@ object VerifySf1 {
     val work = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val out = if (args.length > 1) args(1) else "CORRECTNESS_sf1.json"
     val n = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.Tables.session(32)
     val marker = new java.io.File(s"$work/region.parquet")
     if (!marker.exists()) Replicas.build(spark, "/root/testdata/sf0.1", work, n)
 
@@ -83,7 +76,6 @@ object VerifySf1 {
     // (rules ENABLED = the three/four-rule composition; under stockWindows
     // = the stock single-partition Window plan).
     def e23CompositionSql(): DataFrame = {
-      graft.plans.GlobalRank.ensureRegistered(spark)
       graft.Tables(spark, work, "orders").createOrReplaceTempView("e23_orders")
       spark.sql(
         """SELECT o_orderkey,
@@ -101,7 +93,6 @@ object VerifySf1 {
            ORDER BY o_orderkey""")
     }
     def e24bCompositionSql(): DataFrame = {
-      graft.plans.GlobalRank.ensureRegistered(spark)
       graft.Tables(spark, work, "orders").createOrReplaceTempView("e24b_orders")
       spark.sql(
         """SELECT o_orderkey,
@@ -151,7 +142,7 @@ object VerifySf1 {
       ("c8_curriculum_bins",
         () => CoreQueries.c8CurriculumBins(spark, work),
         // dropDuplicates on the unique key bounds the input WITHOUT changing
-        // a row, so GlobalRankRule (registered session-wide once c8b runs)
+        // a row, so GlobalRankRule (installed on every tuned session)
         // does NOT rewrite this twin — it must stay the stock
         // single-partition Window to be an independent formulation
         () => docs.select(col("doc_id"), col("n_chars"), col("lang"), col("source"))

@@ -112,7 +112,6 @@ class Scd2Spec extends SparkSuite {
     // at time T?" — as-of on valid_from must agree with the explicit
     // BETWEEN-interval formulation for every probe, including probes
     // before the first version (null) and after the last (current row)
-    graft.plans.AsOfJoin.ensureRegistered(spark)
     val rnd = new scala.util.Random(31)
     val changes = Seq.fill(200)((rnd.nextInt(10).toLong, rnd.nextInt(300).toLong))
       .distinct.map { case (k, ts) => (k, ts, s"v${k}_$ts") }

@@ -159,6 +159,32 @@ class SnapshotLakeSpec extends SparkSuite {
     } finally spark.conf.unset("graft.lake.maxAffectedPartitions")
   }
 
+  /** `verb` on a lake of b1 with the bound at 1, touching k1's and k2's
+    * partitions: it must refuse, and the manifest gen must not move. */
+  private def guardRefuses(verb: String => Unit): Unit = {
+    val dir = tmp()
+    SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "dt")
+    val gen = SnapshotLake.currentManifest(spark, dir).get.gen
+    spark.conf.set("graft.lake.maxAffectedPartitions", "1")
+    try {
+      val e = intercept[IllegalArgumentException](verb(dir))
+      assert(e.getMessage.contains("more than 1 distinct dt"),
+        s"expected the affected-partition guard, got: ${e.getMessage}")
+    } finally spark.conf.unset("graft.lake.maxAffectedPartitions")
+    assert(SnapshotLake.currentManifest(spark, dir).get.gen == gen,
+      "a refused verb must publish nothing")
+  }
+
+  test("guard: a delete touching too many partitions fails, gen unmoved") {
+    guardRefuses(dir =>
+      SnapshotLake.delete(spark, dir, col("key").isin("k1", "k2")))
+  }
+
+  test("guard: an update touching too many partitions fails, gen unmoved") {
+    guardRefuses(dir => SnapshotLake.update(spark, dir,
+      col("key").isin("k1", "k2"), Map("price" -> lit(0.0))))
+  }
+
   test("exact-type partitions: string '0025' never collides with int-ish '25'") {
     val dir = tmp()
     val b = Seq(("a", "0025", 1L, 1.0), ("b", "25", 1L, 2.0))

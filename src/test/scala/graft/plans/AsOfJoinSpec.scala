@@ -13,8 +13,6 @@ import graft.SparkSuite
 class AsOfJoinSpec extends SparkSuite {
   import spark.implicits._
 
-  AsOfJoin.ensureRegistered(spark)
-
   // probe(k, ts) — reference(k, ts, v)
   private def probe: DataFrame =
     Seq[(Option[Long], Option[Long])](
@@ -519,9 +517,14 @@ class AsOfJoinSpec extends SparkSuite {
   }
 
   test("ensureRegistered is idempotent") {
-    AsOfJoin.ensureRegistered(spark)
-    AsOfJoin.ensureRegistered(spark)
-    assert(spark.experimental.extraOptimizations.count(_ == AsOfJoinRule) == 1)
-    assert(spark.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
+    // the session bootstrap is GraftExtensions.install; a fresh session
+    // starts without it, and a second install adds nothing
+    val s = spark.newSession()
+    graft.functions.GraftExtensions.install(s)
+    graft.functions.GraftExtensions.install(s)
+    assert(s.experimental.extraOptimizations.count(_ == AsOfJoinRule) == 1)
+    assert(s.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
+    val fns = s.sessionState.functionRegistry.listFunction().map(_.funcName)
+    assert(fns.count(_ == AsOfJoin.FunctionName) == 1)
   }
 }

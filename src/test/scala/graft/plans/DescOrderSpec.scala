@@ -13,8 +13,6 @@ import graft.SparkSuite
 class DescOrderSpec extends SparkSuite {
   import spark.implicits._
 
-  GlobalRank.ensureRegistered(spark)
-
   private val allKeys = Seq(GlobalRankRule.EnabledKey,
     RangeSlidingRule.EnabledKey, RangeMinMaxRule.EnabledKey,
     RowsFollowingRule.EnabledKey, DescOrderRule.EnabledKey)

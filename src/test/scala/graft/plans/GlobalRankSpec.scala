@@ -13,8 +13,6 @@ import graft.SparkSuite
 class GlobalRankSpec extends SparkSuite {
   import spark.implicits._
 
-  GlobalRank.ensureRegistered(spark)
-
   // in-memory relations are leaves, so PlanChecks.bounded is false and the
   // rule treats them as corpus-scale input — exactly what the tests need
   private def corpus(n: Int, seed: Long): DataFrame = {
@@ -849,9 +847,12 @@ class GlobalRankSpec extends SparkSuite {
   }
 
   test("ensureRegistered is idempotent") {
-    GlobalRank.ensureRegistered(spark)
-    GlobalRank.ensureRegistered(spark)
-    assert(spark.experimental.extraOptimizations.count(_ == GlobalRankRule) == 1)
-    assert(spark.experimental.extraStrategies.count(_ == GlobalRankStrategy) == 1)
+    // the session bootstrap is GraftExtensions.install; a fresh session
+    // starts without it, and a second install adds nothing
+    val s = spark.newSession()
+    graft.functions.GraftExtensions.install(s)
+    graft.functions.GraftExtensions.install(s)
+    assert(s.experimental.extraOptimizations.count(_ == GlobalRankRule) == 1)
+    assert(s.experimental.extraStrategies.count(_ == GlobalRankStrategy) == 1)
   }
 }

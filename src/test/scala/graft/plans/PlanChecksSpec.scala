@@ -13,17 +13,16 @@ class PlanChecksSpec extends SparkSuite {
     val bad = docs.withColumn("rn",
       row_number().over(Window.orderBy(col("n_chars"), col("doc_id"))))
     // lint logic is tested on the ANALYZED plan: in a session with
-    // GlobalRankRule registered (the shared test session, once any suite
-    // ran ensureRegistered) the optimizer rewrites this exact cliff away
+    // GlobalRankRule installed (every tuned session, the shared test
+    // session included) the optimizer rewrites this exact cliff away
     // before the optimized plan exists — which is the division of labor:
     // the rule FIXES the positional-rank cliff, the lint still CATCHES
     // whatever the rule cannot rewrite
     assert(PlanChecks.unboundedGlobalWindows(bad.queryExecution.analyzed).nonEmpty,
       "lint missed the one-task global window")
-    GlobalRank.ensureRegistered(spark)
     assert(PlanChecks.unboundedGlobalWindows(bad).isEmpty &&
       bad.queryExecution.optimizedPlan.toString.contains("GlobalRank"),
-      "with the rule registered the cliff must be rewritten, not just flagged")
+      "with the rule installed the cliff must be rewritten, not just flagged")
     // sanctioned: the window input is bounded by the lang-key aggregate
     val good = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       .withColumn("rn", row_number().over(Window.orderBy(col("n").desc, col("lang"))))
@@ -40,7 +39,6 @@ class PlanChecksSpec extends SparkSuite {
   }
 
   test("cost lint: multi-family centered ROWS flags e23/e24b's shapes, names the cascade") {
-    GlobalRank.ensureRegistered(spark)
     val o = Tables(spark, sf001, "orders")
       .select(col("o_orderkey"), col("o_orderdate"),
         col("o_totalprice").cast("decimal(25,4)").as("px"),

@@ -14,8 +14,6 @@ import graft.SparkSuite
 class RangeMinMaxSpec extends SparkSuite {
   import spark.implicits._
 
-  GlobalRank.ensureRegistered(spark)
-
   private def stock[A](body: => A): A = {
     spark.conf.set(RangeMinMaxRule.EnabledKey, "false")
     spark.conf.set(RangeSlidingRule.EnabledKey, "false")

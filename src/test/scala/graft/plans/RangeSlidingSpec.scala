@@ -8,8 +8,6 @@ import graft.SparkSuite
 class RangeSlidingSpec extends SparkSuite {
   import spark.implicits._
 
-  GlobalRank.ensureRegistered(spark)
-
   private def corpus(seed: Long, n: Int) = {
     val rnd = new scala.util.Random(seed)
     (1 to n).map { i =>

@@ -13,8 +13,6 @@ import graft.SparkSuite
 class RowsFollowingSpec extends SparkSuite {
   import spark.implicits._
 
-  GlobalRank.ensureRegistered(spark)
-
   private def stock[A](body: => A): A = {
     val keys = Seq(GlobalRankRule.EnabledKey, RangeSlidingRule.EnabledKey,
       RangeMinMaxRule.EnabledKey, RowsFollowingRule.EnabledKey)

@@ -12,8 +12,6 @@ import graft.SparkSuite
 class SuffixFrameSpec extends SparkSuite {
   import spark.implicits._
 
-  GlobalRank.ensureRegistered(spark)
-
   private val allKeys = Seq(GlobalRankRule.EnabledKey,
     RangeSlidingRule.EnabledKey, RangeMinMaxRule.EnabledKey,
     RowsFollowingRule.EnabledKey, DescOrderRule.EnabledKey,

@@ -115,7 +115,7 @@ class QueriesSpec extends SparkSuite {
         .select(col("doc_id"), col("bin")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       // dropDuplicates on the unique key bounds the input without changing
-      // a row, so GlobalRankRule (registered session-wide by other suites)
+      // a row, so GlobalRankRule (installed on every tuned session)
       // cannot rewrite this comparator — it must stay Spark's own Window
       val window = docs.dropDuplicates("doc_id").withColumn("bin",
           ntile(k).over(Window.orderBy(col("n_chars"), col("doc_id"))))

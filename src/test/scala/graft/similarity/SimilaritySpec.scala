@@ -3,12 +3,10 @@ package graft.similarity
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.functions.VectorExpressions
 
 class SimilaritySpec extends SparkSuite {
 
   test("cosine_sim expression matches a driver-side computation") {
-    VectorExpressions.register(spark)
     val vecs = graft.Tables(spark, sf001, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(10).collect()
@@ -91,7 +89,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("x14 learned codebook: prune decisions still agree with a brute-force replay of its cells") {
-    VectorExpressions.register(spark)
     val tau = 0.42
     val e = graft.Tables(spark, sf001, "embeddings")
       .select(col("vec_id"), col("label"),
@@ -149,7 +146,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("x14: prune decisions agree with a driver-side brute-force replay") {
-    VectorExpressions.register(spark)
     val tau = 0.42
     val pruned = SimilarityQueries.x14SemDedup(spark, sf001, tau).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -775,7 +775,6 @@ class StreamingSpec extends SparkSuite {
     // so per-micro-batch joins compose to exactly the batch result. Each
     // micro-batch is a BATCH plan, so the custom AsOfJoinExec applies
     // unchanged — the streaming face of a13b costs zero extra machinery.
-    graft.plans.AsOfJoin.ensureRegistered(spark)
     val ev = Tables(spark, sf001, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id").as("p_user"), col("ts").as("p_ts"))
@@ -789,7 +788,6 @@ class StreamingSpec extends SparkSuite {
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.plans.AsOfJoin.ensureRegistered(batch.sparkSession)
         val joined = batch.join(purchases,
           col("user_id") === col("p_user") && expr("asof_match(ts, p_ts)"),
           "left")
@@ -820,7 +818,6 @@ class StreamingSpec extends SparkSuite {
     // itself a stream of changes. TemporalJoin buffers probes until the
     // watermark proves their match final; emitted rows must equal the batch
     // native as-of join for every watermark-closed probe, each exactly once
-    graft.plans.AsOfJoin.ensureRegistered(spark)
     val schema = spark.read.parquet(landing).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "4").parquet(landing) // many micro-batches
@@ -955,7 +952,6 @@ class StreamingSpec extends SparkSuite {
     assert(((gotMap.keySet -- afterRun1) & wave1Probes).nonEmpty,
       "no wave-1 probe was emitted after the restart — pending state did not survive")
     // every emitted row equals the batch native as-of over the FULL data
-    graft.plans.AsOfJoin.ensureRegistered(spark)
     val ev = Tables(spark, sf001, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id").as("p_user"), col("ts").as("p_ts"))

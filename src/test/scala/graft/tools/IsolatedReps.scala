@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** §6.5 isolated-reps adjudication harness: time one query N times on a
   * warm JVM, print per-rep seconds. Dev-only (test scope). */
 object IsolatedReps {
@@ -7,12 +6,7 @@ object IsolatedReps {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 7
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.Tables.session(32)
     graft.Tables.all.foreach(n => graft.Tables(spark, sfDir, n).count())
     val fn = graft.SparkEntry.queries(name)
     try fn(spark, "/root/testdata/sf0.001").write.mode("overwrite").format("noop").save()
