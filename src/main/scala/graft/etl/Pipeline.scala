@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,36 +34,51 @@ object Pipeline {
       rates: RateProvider,
       targetPath: String,
       targetCurrency: String = "USD",
-      sourceTz: Option[String] = None): RunMetrics = {
+      sourceTz: Option[String] = None): RunMetrics =
+    audited(spark, bars, dim, rates, targetCurrency, sourceTz,
+        Observation("pipeline_audit")) { observed =>
+      // timestamp_utc is also a key, so as versionCol alone it orders nothing
+      // within a key group — the value columns tie-break so a batch carrying
+      // an original AND a corrected bar for one key picks a DETERMINISTIC
+      // winner (the reference relies on arrival order, postgres_writer.py:251-259).
+      val tieBreakers = observed.columns.toSeq
+        .filterNot(Seq("ticker", "timestamp_utc").contains)
+      val deduped = Upsert.lastWriteWins(
+        observed, keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
+        tieBreakers = tieBreakers)
+      // Date-partitioned sink: an incremental batch only rewrites the trade
+      // dates it carries; the rest of the (100 TB) table is untouched.
+      // p_date is functionally determined by the timestamp_utc key, as
+      // mergePartitionedParquet's contract requires.
+      migrateToPartitioned(spark, targetPath)
+      Upsert.mergePartitionedParquet(spark, targetPath,
+        deduped.withColumn("p_date", to_date(col("timestamp_utc"))),
+        keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
+        partitionCol = "p_date", tieBreakers = tieBreakers)
+    }
+
+  /** E1 standardize → E2 convert → the audit `observe`, handed to `write`
+    * (the one action that executes the plan); returns the metrics that
+    * action observed.
+    */
+  private def audited(
+      spark: SparkSession,
+      bars: DataFrame,
+      dim: DataFrame,
+      rates: RateProvider,
+      targetCurrency: String,
+      sourceTz: Option[String],
+      obs: Observation = Observation())(write: DataFrame => Unit): RunMetrics = {
     val standardized = Standardizer.standardize(bars, dim, sourceTz)
     val converted =
       CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
-    val obs = Observation("pipeline_audit")
-    val observed = converted.observe(
+    write(converted.observe(
       obs,
       count(lit(1)).as("rows"),
       sum(col("close").isNull.cast("long")).as("null_close"),
       sum((col("close").isNotNull &&
         col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
-        .as("missing_rate"))
-    // timestamp_utc is also a key, so as versionCol alone it orders nothing
-    // within a key group — the value columns tie-break so a batch carrying
-    // an original AND a corrected bar for one key picks a DETERMINISTIC
-    // winner (the reference relies on arrival order, postgres_writer.py:251-259).
-    val tieBreakers = observed.columns.toSeq
-      .filterNot(Seq("ticker", "timestamp_utc").contains)
-    val deduped = Upsert.lastWriteWins(
-      observed, keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
-      tieBreakers = tieBreakers)
-    // Date-partitioned sink: an incremental batch only rewrites the trade
-    // dates it carries; the rest of the (100 TB) table is untouched.
-    // p_date is functionally determined by the timestamp_utc key, as
-    // mergePartitionedParquet's contract requires.
-    migrateToPartitioned(spark, targetPath)
-    Upsert.mergePartitionedParquet(spark, targetPath,
-      deduped.withColumn("p_date", to_date(col("timestamp_utc"))),
-      keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
-      partitionCol = "p_date", tieBreakers = tieBreakers)
+        .as("missing_rate")))
     val m = obs.get
     RunMetrics(
       rows = m("rows").asInstanceOf[Long],
@@ -79,45 +95,24 @@ object Pipeline {
     * targets.
     */
   private def migrateToPartitioned(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(path)
-    // Crash recovery FIRST: a previous migration can die between its two
-    // renames (cur→backup done, staged→cur not), leaving the table path
-    // missing. Without healing, the next run would treat the table as absent
-    // and write ONLY the incremental batch — silently stranding all history
-    // in __premigrate. If the staged copy exists, finish the swap; otherwise
-    // roll the backup straight back.
-    locally {
-      val backup = new org.apache.hadoop.fs.Path(path + "__premigrate")
-      val staged = new org.apache.hadoop.fs.Path(path + "__migrate")
-      if (fs.exists(backup)) {
-        if (!fs.exists(cur)) {
-          val src = if (fs.exists(staged)) staged else backup
-          if (!fs.rename(src, cur))
-            throw new java.io.IOException(s"migration recovery failed for $path")
-        }
-        // cur exists now (recovered or the crash was post-swap): the backup
-        // and any leftover staging are superseded
-        fs.delete(backup, true)
-      }
-      if (fs.exists(staged)) fs.delete(staged, true)
-    }
+    val cur = new Path(path)
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val backup = new Path(path + "__premigrate")
+    val staged = new Path(path + "__migrate")
+    // Crash recovery FIRST: a migration that died between its two renames
+    // left the table path missing. Roll the legacy copy back and redo the
+    // migration below — without this, the run would treat the table as
+    // absent and write ONLY the batch, stranding all history.
+    Upsert.recoverSwap(fs, cur, backup, staged)
     if (!fs.exists(cur)) return
     val entries = fs.listStatus(cur).map(_.getPath.getName)
     val legacy = !entries.exists(_.startsWith("p_date=")) &&
       entries.exists(_.endsWith(".parquet"))
     if (legacy) {
-      val staged = new org.apache.hadoop.fs.Path(path + "__migrate")
-      if (fs.exists(staged)) fs.delete(staged, true)
       spark.read.parquet(path)
         .withColumn("p_date", to_date(col("timestamp_utc")))
         .write.partitionBy("p_date").parquet(staged.toString)
-      val backup = new org.apache.hadoop.fs.Path(path + "__premigrate")
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (!fs.rename(cur, backup) || !fs.rename(staged, cur))
-        throw new java.io.IOException(s"migration swap failed for $path")
-      fs.delete(backup, true)
+      Upsert.installSwap(fs, cur, staged, backup)
     }
   }
 
@@ -148,25 +143,11 @@ object Pipeline {
       sourceTz: Option[String] = None,
       props: java.util.Properties = new java.util.Properties()): RunMetrics = {
     Ddl.createTables(url, dialect, props)
-    val standardized = Standardizer.standardize(bars, dim, sourceTz)
-    val converted =
-      CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
-    val obs = Observation()
-    val observed = converted.observe(
-      obs,
-      count(lit(1)).as("rows"),
-      sum(col("close").isNull.cast("long")).as("null_close"),
-      sum((col("close").isNotNull &&
-        col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
-        .as("missing_rate"))
-    // 1) dim first (FK target), 2) facts second, FK now satisfiable.
-    upsertIndicesJdbc(observed, url, now, dialect, props)
-    upsertQuotesJdbc(observed, url, now, dialect, targetCurrency, props)
-    val m = obs.get
-    RunMetrics(
-      rows = m("rows").asInstanceOf[Long],
-      nullClose = m("null_close").asInstanceOf[Long],
-      missingRate = m("missing_rate").asInstanceOf[Long])
+    audited(spark, bars, dim, rates, targetCurrency, sourceTz) { observed =>
+      // 1) dim first (FK target), 2) facts second, FK now satisfiable.
+      upsertIndicesJdbc(observed, url, now, dialect, props)
+      upsertQuotesJdbc(observed, url, now, dialect, targetCurrency, props)
+    }
   }
 
   /** The reference's complete two-table load onto TWO SNAPSHOT LAKES —
@@ -209,62 +190,47 @@ object Pipeline {
       indicesLake: String,
       quotesLake: String,
       targetCurrency: String = "USD",
-      sourceTz: Option[String] = None): RunMetrics = {
-    val standardized = Standardizer.standardize(bars, dim, sourceTz)
-    val converted =
-      CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
-    val obs = Observation()
-    val observed = converted.observe(
-      obs,
-      count(lit(1)).as("rows"),
-      sum(col("close").isNull.cast("long")).as("null_close"),
-      sum((col("close").isNotNull &&
-        col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
-        .as("missing_rate"))
-    val tieBreakers = observed.columns.toSeq
-      .filterNot(Seq("ticker", "timestamp_utc").contains)
-    val quotes = Upsert.lastWriteWins(
-      observed, keys = Seq("ticker", "timestamp_utc"),
-      versionCol = "timestamp_utc", tieBreakers = tieBreakers)
-      .withColumn("p_date", to_date(col("timestamp_utc")))
-      .localCheckpoint() // one evaluation serves FK check + both commits
-    val conf = spark.sparkContext.hadoopConfiguration
-    // both leases for the whole span, canonical order (see contract above);
-    // the inner merges' withLease calls share these reentrant holds
-    val Seq(first, second) = Seq(indicesLake, quotesLake).sorted
-    LakeLease.withLease(conf, first) {
-      LakeLease.withLease(conf, second) {
-        // FK gate BEFORE any commit: standardize's enrich join is a LEFT
-        // join, so a ticker with no dimension row surfaces as a null name
-        // (NOT NULL in the reference dim). Bounded collect: distinct rogue
-        // tickers only.
-        val rogue = quotes.filter(col("name").isNull)
-          .select(col("ticker")).distinct().limit(21)
-          .collect().map(_.getString(0))
-        if (rogue.nonEmpty)
-          throw new IllegalStateException(
-            s"ticker(s) ${rogue.take(20).mkString(", ")} carry no dimension " +
-              "metadata — loading their quotes would dangle the FK " +
-              "(reference ON DELETE RESTRICT semantics); nothing was " +
-              "committed to either lake")
-        // 1) dim first (FK target), keyed LWW by ticker
-        SnapshotLake.merge(spark, indicesLake,
-          quotes.select(col("ticker"), col("name"), col("country"),
-            col("exchange"), col("original_currency")).dropDuplicates("ticker"),
-          keys = Seq("ticker"), versionCol = "name", partitionCol = "ticker")
-        // 2) facts second — the FK-safe cut order
-        SnapshotLake.merge(spark, quotesLake, quotes,
-          keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
-          partitionCol = "p_date", tieBreakers = tieBreakers,
-          statsCols = Seq("timestamp_utc"))
+      sourceTz: Option[String] = None): RunMetrics =
+    audited(spark, bars, dim, rates, targetCurrency, sourceTz) { observed =>
+      val tieBreakers = observed.columns.toSeq
+        .filterNot(Seq("ticker", "timestamp_utc").contains)
+      val quotes = Upsert.lastWriteWins(
+        observed, keys = Seq("ticker", "timestamp_utc"),
+        versionCol = "timestamp_utc", tieBreakers = tieBreakers)
+        .withColumn("p_date", to_date(col("timestamp_utc")))
+        .localCheckpoint() // one evaluation serves FK check + both commits
+      val conf = spark.sparkContext.hadoopConfiguration
+      // both leases for the whole span, canonical order (see contract above);
+      // the inner merges' withLease calls share these reentrant holds
+      val Seq(first, second) = Seq(indicesLake, quotesLake).sorted
+      LakeLease.withLease(conf, first) {
+        LakeLease.withLease(conf, second) {
+          // FK gate BEFORE any commit: standardize's enrich join is a LEFT
+          // join, so a ticker with no dimension row surfaces as a null name
+          // (NOT NULL in the reference dim). Bounded collect: distinct rogue
+          // tickers only.
+          val rogue = quotes.filter(col("name").isNull)
+            .select(col("ticker")).distinct().limit(21)
+            .collect().map(_.getString(0))
+          if (rogue.nonEmpty)
+            throw new IllegalStateException(
+              s"ticker(s) ${rogue.take(20).mkString(", ")} carry no dimension " +
+                "metadata — loading their quotes would dangle the FK " +
+                "(reference ON DELETE RESTRICT semantics); nothing was " +
+                "committed to either lake")
+          // 1) dim first (FK target), keyed LWW by ticker
+          SnapshotLake.merge(spark, indicesLake,
+            quotes.select(col("ticker"), col("name"), col("country"),
+              col("exchange"), col("original_currency")).dropDuplicates("ticker"),
+            keys = Seq("ticker"), versionCol = "name", partitionCol = "ticker")
+          // 2) facts second — the FK-safe cut order
+          SnapshotLake.merge(spark, quotesLake, quotes,
+            keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
+            partitionCol = "p_date", tieBreakers = tieBreakers,
+            statsCols = Seq("timestamp_utc"))
+        }
       }
     }
-    val m = obs.get
-    RunMetrics(
-      rows = m("rows").asInstanceOf[Long],
-      nullClose = m("null_close").asInstanceOf[Long],
-      missingRate = m("missing_rate").asInstanceOf[Long])
-  }
 
   /** Dim-upsert step of the composed load (≙ `upsert_indices`,
     * `postgres_writer.py:116-178`): metadata extracted from the standardized

@@ -1,9 +1,9 @@
 package graft.etl
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -74,19 +74,12 @@ object Upsert {
       tieBreakers: Seq[String]): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = new Path(path)
-    // Crash recovery FIRST: a previous run that died between its two swap
-    // renames leaves the ONLY copy of the table parked at __old with `cur`
-    // missing — without this rollback, the replay would read empty state,
-    // merge just the batch, and then DELETE the parked copy (silent loss of
-    // every previously merged row). Parked + destination present = the
-    // install completed; drop the stale park.
-    locally {
-      val parked = new Path(path + "__old")
-      if (fs.exists(parked)) {
-        if (!fs.exists(cur)) renameOrThrow(fs, parked, cur)
-        else fs.delete(parked, true)
-      }
-    }
+    val parked = new Path(path + "__old")
+    val staging = new Path(path + "__staging")
+    // Crash recovery FIRST (see [[recoverSwap]]): without it a replay after
+    // a crash between the swap renames would read empty state, merge just
+    // the batch, and then drop the parked copy — every merged row lost.
+    recoverSwap(fs, cur, parked, staging)
     val merged =
       if (fs.exists(cur)) {
         val existing = spark.read.parquet(path).withColumn("__gen", lit(0L))
@@ -95,13 +88,8 @@ object Upsert {
         // each generation via versionCol.
         lastWriteWins(existing.unionByName(deduped), keys, "__gen", versionCol +: tieBreakers)
       } else deduped
-    val tmp = new Path(path + "__staging")
-    merged.drop("__gen").write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(path + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) renameOrThrow(fs, cur, old)
-    renameOrThrow(fs, tmp, cur)
-    fs.delete(old, true)
+    merged.drop("__gen").write.mode("overwrite").parquet(staging.toString)
+    installSwap(fs, cur, staging, parked)
   }
 
   /** Partition-scoped parquet MERGE — the 100 TB shape of [[mergeIntoParquet]].
@@ -169,24 +157,19 @@ object Upsert {
     val cur = new Path(path)
     val staging = new Path(path + "__staging")
     val oldRoot = new Path(path + "__old")
-    // Crash recovery BEFORE anything else: a parked dir left under oldRoot
-    // means a previous swap was interrupted. For each parked partition dir:
-    // destination missing → the install never happened, roll the parked
-    // copy back (without this, a replay would read an EMPTY partition and
-    // silently drop every key the batch didn't carry); destination present
-    // → the install completed, drop the parked copy.
-    recoverParkedPartitions(fs, cur, oldRoot)
-    if (fs.exists(staging)) fs.delete(staging, true)
+    recoverParkedPartitions(fs, cur, staging, oldRoot)
+    // Bounded driver collect: one value per affected partition. Checked
+    // before the first write too — a null value would otherwise create the
+    // `__HIVE_DEFAULT_PARTITION__` dir that every later merge refuses.
+    val affected = deduped.select(col(partitionCol)).distinct().collect().map(_.get(0))
+    require(!affected.contains(null),
+      s"null $partitionCol in update batch: the scoped merge cannot address " +
+        "the null partition (isin() never matches null) — filter or default it upstream")
     if (!fs.exists(cur)) {
       deduped.write.partitionBy(partitionCol).parquet(path)
       return
     }
-    // Bounded driver collect: one value per affected partition.
-    val affected = deduped.select(col(partitionCol)).distinct().collect().map(_.get(0))
     if (affected.isEmpty) return
-    require(!affected.contains(null),
-      s"null $partitionCol in update batch: the scoped merge cannot address " +
-        "the null partition (isin() never matches null) — filter or default it upstream")
     // ONE non-recursive listing of the table root: detects a legacy
     // unpartitioned layout (data files, no partition dirs) and gives the
     // existing partition-dir names so the read below opens ONLY affected
@@ -238,30 +221,26 @@ object Upsert {
       _.startsWith(partitionCol + "="))
   }
 
-  /** Crash recovery for the park/install partition swap (shared by
-    * [[mergePartitionedParquet]] and [[compactPartitionedParquet]]): a
-    * parked dir left under `oldRoot` means a previous swap was interrupted.
-    * Destination missing → the install never happened, roll the parked copy
-    * back (without this a replay would read an EMPTY partition and silently
-    * drop every key the batch didn't carry); destination present → the
-    * install completed, drop the parked copy.
+  /** [[recoverSwap]] for every partition dir parked under `oldRoot` (shared
+    * by [[mergePartitionedParquet]] and [[compactPartitionedParquet]]), then
+    * clears both roots.
     */
   private def recoverParkedPartitions(
-      fs: org.apache.hadoop.fs.FileSystem, cur: Path, oldRoot: Path): Unit =
-    if (fs.exists(oldRoot)) {
+      fs: FileSystem, cur: Path, staging: Path, oldRoot: Path): Unit = {
+    if (fs.exists(oldRoot))
       fs.listStatus(oldRoot).foreach { s =>
-        val dest = new Path(cur, s.getPath.getName)
-        if (!fs.exists(dest)) renameOrThrow(fs, s.getPath, dest)
+        val name = s.getPath.getName
+        recoverSwap(fs, new Path(cur, name), s.getPath, new Path(staging, name))
       }
-      fs.delete(oldRoot, true)
-    }
+    fs.delete(oldRoot, true)
+    fs.delete(staging, true)
+  }
 
-  /** Park-then-install every staged partition dir matching `pick`, then
-    * clean up both roots. Atomicity is per partition-dir rename; a crash in
-    * the window is healed by [[recoverParkedPartitions]] on the next writer.
+  /** [[installSwap]] for every staged partition dir matching `pick`, then
+    * clears both roots. Atomicity is per partition-dir rename.
     */
   private def installStagedPartitions(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
       cur: Path,
       staging: Path,
       oldRoot: Path,
@@ -270,10 +249,8 @@ object Upsert {
     fs.listStatus(staging).iterator
       .filter(s => s.isDirectory && pick(s.getPath.getName))
       .foreach { s =>
-        val dest = new Path(cur, s.getPath.getName)
-        if (fs.exists(dest))
-          renameOrThrow(fs, dest, new Path(oldRoot, s.getPath.getName))
-        renameOrThrow(fs, s.getPath, dest)
+        val name = s.getPath.getName
+        installSwap(fs, new Path(cur, name), s.getPath, new Path(oldRoot, name))
       }
     fs.delete(oldRoot, true)
     fs.delete(staging, true)
@@ -338,8 +315,7 @@ object Upsert {
     if (!fs.exists(cur)) return Nil
     val staging = new Path(path + "__staging")
     val oldRoot = new Path(path + "__old")
-    recoverParkedPartitions(fs, cur, oldRoot)
-    if (fs.exists(staging)) fs.delete(staging, true)
+    recoverParkedPartitions(fs, cur, staging, oldRoot)
     val partDirs = fs.listStatus(cur)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
     val picked = partDirs.flatMap { d =>
@@ -415,14 +391,10 @@ object Upsert {
       val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val cur = new Path(path)
       val parked = new Path(path + "__old")
-      if (fs.exists(parked)) {
-        if (!fs.exists(cur)) renameOrThrow(fs, parked, cur)
-        else fs.delete(parked, true)
-      }
+      val staging = new Path(path + "__staging")
+      recoverSwap(fs, cur, parked, staging)
       if (!fs.exists(cur)) None
       else {
-        val staging = new Path(path + "__staging")
-        if (fs.exists(staging)) fs.delete(staging, true)
         val files = fs.listStatus(cur)
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
         val bytes = files.map(_.getLen).sum
@@ -436,9 +408,7 @@ object Upsert {
           // read as null there, exactly as they did pre-compaction.
           spark.read.option("mergeSchema", "true").parquet(path)
             .coalesce(want).write.parquet(staging.toString)
-          renameOrThrow(fs, cur, parked)
-          renameOrThrow(fs, staging, cur)
-          fs.delete(parked, true)
+          installSwap(fs, cur, staging, parked)
           val after = fs.listStatus(cur)
             .count(f => f.isFile && !f.getPath.getName.startsWith("_"))
           Some((files.length, after))
@@ -449,10 +419,40 @@ object Upsert {
   /** Hadoop FileSystem.rename reports failure by returning false — silent
     * acceptance would let a failed swap drop a batch's data.
     */
-  private[graft] def renameOrThrow(
-      fs: org.apache.hadoop.fs.FileSystem, src: Path, dst: Path): Unit =
+  private[graft] def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
+
+  /** The one crash rule of every rename-swap directory install (whole
+    * tables, partition dirs, fold state, the layout migration), run by the
+    * writer under its lease BEFORE it reads `live` or stages anything:
+    *
+    *  - `parked` present, `live` missing → a crash fell between the two
+    *    renames of [[installSwap]] and the parked copy is the only one:
+    *    restore it (reading empty state instead would lose every row);
+    *  - `parked` and `live` both present → the install completed: drop
+    *    the park;
+    *  - any `staging` left by a crash before the install is cleared.
+    */
+  private[graft] def recoverSwap(
+      fs: FileSystem, live: Path, parked: Path, staging: Path): Unit = {
+    if (fs.exists(parked)) {
+      if (!fs.exists(live)) renameOrThrow(fs, parked, live)
+      else fs.delete(parked, true)
+    }
+    if (fs.exists(staging)) fs.delete(staging, true)
+  }
+
+  /** Park `live` (when present) at `parked`, rename `staging` into its
+    * place, drop the park. A crash between the renames is healed by
+    * [[recoverSwap]] on the next writer.
+    */
+  private[graft] def installSwap(
+      fs: FileSystem, live: Path, staging: Path, parked: Path): Unit = {
+    if (fs.exists(live)) renameOrThrow(fs, live, parked)
+    renameOrThrow(fs, staging, live)
+    fs.delete(parked, true)
+  }
 
   /** SQL dialects for the keyed-upsert statement.
     *
@@ -464,6 +464,9 @@ object Upsert {
     * ≙ the reference trigger at `postgres_writer.py:53-73`).
     */
   sealed trait Dialect {
+    /** The `dialect` option value of [[graft.sources.JdbcUpsertDataSource]]. */
+    def name: String
+
     def upsertSql(
         table: String,
         cols: Seq[String],
@@ -489,6 +492,7 @@ object Upsert {
     * shape (`postgres_writer.py:148-154,234-240`).
     */
   case object Postgres extends Dialect {
+    val name = "postgres"
     def upsertSql(table: String, cols: Seq[String], keys: Seq[String],
         noUpdate: Seq[String] = Nil): String = {
       val sets = updatable(cols, keys, noUpdate)
@@ -501,6 +505,7 @@ object Upsert {
 
   /** ANSI MERGE for engines without ON CONFLICT (Derby, etc.). */
   case object AnsiMerge extends Dialect {
+    val name = "ansi"
     def upsertSql(table: String, cols: Seq[String], keys: Seq[String],
         noUpdate: Seq[String] = Nil): String = {
       val on = keys.map(k => s"t.${q(k)} = s.${q(k)}").mkString(" AND ")
@@ -521,6 +526,7 @@ object Upsert {
     * updatable non-keys (UPDATE SET), then every column (INSERT VALUES).
     */
   case object Derby extends Dialect {
+    val name = "derby"
     def upsertSql(table: String, cols: Seq[String], keys: Seq[String],
         noUpdate: Seq[String] = Nil): String = {
       val on = keys.map(k => s"$table.${q(k)} = ?").mkString(" AND ")
@@ -538,22 +544,18 @@ object Upsert {
       keys ++ updatable(cols, keys, noUpdate) ++ cols
   }
 
-  /** JDBC drivers want java.sql datetime types; Spark Rows carry java.time
-    * under the (default) java8 datetime API.
-    */
-  private def jdbcValue(v: Any): Any = v match {
-    case i: java.time.Instant       => java.sql.Timestamp.from(i)
-    case d: java.time.LocalDate     => java.sql.Date.valueOf(d)
-    case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t)
-    case x                          => x
-  }
-
-  /** L2/L3 — distributed JDBC upsert: each partition opens one connection,
-    * writes batches of `batchSize` (the reference pages at 1000,
-    * `postgres_writer.py:259`), and commits per partition. Global atomicity
-    * is *not* promised (SURVEY.md §7 #1) — instead the statement itself is
-    * idempotent, so Spark task retries and whole-job re-runs converge, which
-    * is the reference's own recovery model (`README.md:37`).
+  /** L2/L3 — distributed JDBC upsert: a Dataset write through
+    * [[graft.sources.JdbcUpsertDataSource]], whose per-partition writer
+    * opens one connection, writes batches of `batchSize` (the reference
+    * pages at 1000, `postgres_writer.py:259`), and commits per partition.
+    * Global atomicity is *not* promised (SURVEY.md §7 #1) — instead the
+    * statement itself is idempotent, so Spark task retries and whole-job
+    * re-runs converge, which is the reference's own recovery model
+    * (`README.md:37`). Being a write action, it fires the observed metrics
+    * of any `Observation` on `df`.
+    *
+    * `props` map to the source's options: `user`/`password` as themselves,
+    * every other driver property as `jdbcprop.<name>`.
     *
     * Callers must `lastWriteWins` first so a batch never carries two rows
     * for one key (cross-partition write order is nondeterministic).
@@ -567,34 +569,22 @@ object Upsert {
       batchSize: Int = 1000,
       props: java.util.Properties = new java.util.Properties(),
       noUpdate: Seq[String] = Nil): Unit = {
-    val cols = df.columns.toSeq
-    val sql = dialect.upsertSql(table, cols, keys, noUpdate)
-    val bindIdx = dialect.bindOrder(cols, keys, noUpdate).map(cols.indexOf).toArray
-    val width = bindIdx.length
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val conn: Connection = DriverManager.getConnection(url, props)
-        conn.setAutoCommit(false)
-        val st: PreparedStatement = conn.prepareStatement(sql)
-        try {
-          var pending = 0
-          rows.foreach { r =>
-            var i = 0
-            while (i < width) { st.setObject(i + 1, jdbcValue(r.get(bindIdx(i)))); i += 1 }
-            st.addBatch()
-            pending += 1
-            if (pending >= batchSize) { st.executeBatch(); pending = 0 }
-          }
-          if (pending > 0) st.executeBatch()
-          conn.commit()
-        } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally {
-          st.close(); conn.close()
-        }
-      }
-    }
+    val propOptions = props.stringPropertyNames.asScala.map { k =>
+      (if (k == "user" || k == "password") k else s"jdbcprop.$k") -> props.getProperty(k)
+    }.toMap
+    df.write.format(classOf[graft.sources.JdbcUpsertDataSource].getName)
+      .option("url", url)
+      .option("dbtable", table)
+      .option("keys", keys.mkString(","))
+      .option("dialect", dialect.name)
+      .option("batchsize", batchSize.toString)
+      .option("noupdate", noUpdate.mkString(","))
+      .options(propOptions)
+      .mode("append")
+      .save()
   }
+
+  private[graft] val dialects: Seq[Dialect] = Seq(Postgres, Derby, AnsiMerge)
 
   /** L1 parity — keyed upsert with the reference's audit columns
     * (`postgres_writer.py:48-49` defaults + the `update_updated_at_column`

@@ -15,12 +15,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.etl.Upsert
 
 /** Keyed JDBC UPSERT as a DataSourceV2 WRITE — the sink face of the V2
-  * catalog surface ([[BarDataSource]] is the source face). Every existing
-  * consumer of [[graft.etl.Upsert.upsertJdbc]] keeps its semantics (one
-  * connection per partition, `batchsize`-paged executeBatch, the same
+  * catalog surface ([[BarDataSource]] is the source face) and the engine's
+  * one JDBC row loop: [[graft.etl.Upsert.upsertJdbc]] is a thin call into
+  * it. One connection per partition, `batchsize`-paged executeBatch, the
   * per-dialect MERGE/ON CONFLICT statement, idempotent re-runs — the
-  * reference's `postgres_writer.py` contract), but the write now rides
-  * Spark's V2 write protocol:
+  * reference's `postgres_writer.py` contract — riding Spark's V2 write
+  * protocol:
   *
   * {{{
   *   df.write.format("graft.sources.JdbcUpsertDataSource")
@@ -32,10 +32,10 @@ import graft.etl.Upsert
   * }}}
   *
   * plans an `AppendData` over this table — visible in EXPLAIN, observable
-  * by QueryExecutionListeners, and routable through a catalog — instead of
-  * an opaque `foreachPartition` lambda.
+  * by QueryExecutionListeners (so an `Observation` on the written frame
+  * fires), and routable through a catalog.
   *
-  * Contracts carried over verbatim from [[Upsert.upsertJdbc]]:
+  * Contracts:
   *  - the target table must exist (bootstrap via [[graft.etl.Ddl]]);
   *  - callers `lastWriteWins` first, so a batch never holds two rows per
   *    key (cross-partition write order is nondeterministic);
@@ -48,7 +48,7 @@ import graft.etl.Upsert
   * database enforces its own constraints; reporting a PK column non-null
   * would make Spark reject writes of provably-safe nullable frames. The
   * table declares ACCEPT_ANY_SCHEMA and binds placeholders from the QUERY
-  * schema (exactly `upsertJdbc`'s `df.columns` contract), so column subsets
+  * schema (the written frame's columns), so column subsets
   * work and the database, not the analyzer, owns type errors.
   */
 class JdbcUpsertDataSource extends TableProvider {
@@ -111,21 +111,18 @@ object JdbcUpsertV2 {
         url = req("url"),
         table = req("dbtable"),
         keys = keys,
-        dialect = o.getOrElse("dialect", "postgres").toLowerCase match {
-          case "postgres" => Upsert.Postgres
-          case "derby" => Upsert.Derby
-          case "ansi" => Upsert.AnsiMerge
-          case d => throw new IllegalArgumentException(
-            s"unknown dialect '$d' (postgres|derby|ansi)")
+        dialect = {
+          val d = o.getOrElse("dialect", "postgres").toLowerCase
+          Upsert.dialects.find(_.name == d).getOrElse(throw new IllegalArgumentException(
+            s"unknown dialect '$d' (${Upsert.dialects.map(_.name).mkString("|")})"))
         },
         batchSize = o.getOrElse("batchsize", "1000").toInt,
         noUpdate = o.get("noupdate").toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-        // user/password ride as first-class options (upsertJdbc's
-        // java.util.Properties contract); any other driver property goes
-        // through a `jdbcprop.<name>` option. Names arrive lowercased —
-        // DSv2's CaseInsensitiveStringMap folds keys before we see them —
-        // which every mainstream JDBC driver accepts.
+        // user/password ride as first-class options; any other driver
+        // property goes through a `jdbcprop.<name>` option. Names arrive
+        // lowercased — DSv2's CaseInsensitiveStringMap folds keys before we
+        // see them — which every mainstream JDBC driver accepts.
         props = o.get("user").map("user" -> _).toMap ++
           o.get("password").map("password" -> _).toMap ++
           o.collect { case (k, v) if k.startsWith("jdbcprop.") =>
@@ -177,7 +174,7 @@ object JdbcUpsertV2 {
       case DoubleType => DOUBLE
       case FloatType => REAL
       case StringType => VARCHAR
-      case TimestampType => TIMESTAMP
+      case TimestampType | TimestampNTZType => TIMESTAMP
       case DateType => DATE
       case BooleanType => BOOLEAN
       case _: DecimalType => DECIMAL
@@ -196,6 +193,8 @@ object JdbcUpsertV2 {
       case FloatType => row.getFloat(ord)
       case StringType => row.getUTF8String(ord).toString
       case TimestampType => DateTimeUtils.toJavaTimestamp(row.getLong(ord))
+      case TimestampNTZType =>
+        java.sql.Timestamp.valueOf(DateTimeUtils.microsToLocalDateTime(row.getLong(ord)))
       case DateType => DateTimeUtils.toJavaDate(row.getInt(ord))
       case BooleanType => row.getBoolean(ord)
       case d: DecimalType => row.getDecimal(ord, d.precision, d.scale).toJavaBigDecimal
@@ -225,7 +224,7 @@ private[sources] final class JdbcUpsertTable(
 
 private[sources] final class JdbcUpsertBatchWrite(
     cfg: JdbcUpsertV2.Config, schema: StructType) extends BatchWrite {
-  // per-partition transactions carry the durability (upsertJdbc's model);
+  // per-partition transactions carry the durability;
   // the driver-side commit has nothing left to do
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new JdbcUpsertWriterFactory(cfg, schema)
@@ -242,10 +241,9 @@ private[sources] final class JdbcUpsertWriterFactory(
 private[sources] final case class JdbcUpsertCommit(rows: Long)
     extends WriterCommitMessage
 
-/** One partition's writer: the exact `upsertJdbc` loop (one connection,
-  * prepared dialect statement, paged executeBatch, commit-or-rollback),
-  * reading Catalyst internal rows directly — no Row conversion on the
-  * write path.
+/** One partition's writer: one connection, prepared dialect statement,
+  * paged executeBatch, commit-or-rollback — reading Catalyst internal rows
+  * directly, no Row conversion on the write path.
   */
 private[sources] final class JdbcUpsertDataWriter(
     cfg: JdbcUpsertV2.Config, schema: StructType)

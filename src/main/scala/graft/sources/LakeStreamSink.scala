@@ -24,14 +24,13 @@ import graft.etl.SnapshotLake
   * contract — the SAME semantics, snapshot isolation, lease, widen-only
   * evolution check, and stats sidecars as every batch and SQL write face,
   * so a streaming producer and an `INSERT INTO` land indistinguishable
-  * commits. This retires `foreachBatch` + hand-rolled idempotence
-  * ([[graft.streaming.StreamingIngest.upsertAvailableNow]]) for the
-  * common shape: exactly-once comes from the in-lake per-sink batch
-  * marker (checked inside the commit's lease; replays skip without
-  * reading the batch) plus keyed LWW convergence for the one
-  * crash-between window — see mergeStreamBatch's scaladoc for the full
-  * argument, including why CDC readers of the lake observe exactly-once
-  * too.
+  * commits. It is the engine's one keyed stream-into-files path (no
+  * `foreachBatch` with hand-rolled idempotence): exactly-once comes from
+  * the in-lake per-sink batch marker (checked inside the commit's lease;
+  * replays skip without reading the batch) plus keyed LWW convergence for
+  * the one crash-between window — see mergeStreamBatch's scaladoc for the
+  * full argument, including why CDC readers of the lake observe
+  * exactly-once too.
   *
   * Sink API choice, deliberately V1 ([[Sink]], the Delta-Lake precedent):
   * a keyed MERGE's natural unit is the whole micro-batch DataFrame (it

@@ -19,8 +19,8 @@ import graft.etl.{LakeLease, SnapshotLake}
   * faces use (≙ one cron tick: drain everything available, then stop):
   *
   *  - consumer position is DURABLE state beside the checkpoint — one marker
-  *    file per consumed generation under `consumerDir` (the
-  *    [[StreamingIngest.applyMergeBatchOnce]] marker-ledger pattern), so a
+  *    file per consumed generation under `consumerDir` (the marker-ledger
+  *    pattern of [[graft.etl.SnapshotLake.mergeStreamBatch]]), so a
   *    restarted consumer resumes after the last marker and a replayed tick
   *    re-emits nothing;
   *  - a fresh consumer BOOTSTRAPS from the oldest retained snapshot,
@@ -38,7 +38,7 @@ import graft.etl.{LakeLease, SnapshotLake}
   *    silently skipping commits — size retention to the slowest consumer's
   *    lag, exactly the [[graft.etl.SnapshotLake.vacuum]] contract.
   *
-  * Exactly-once analysis (the applyMergeBatchOnce contract, verbatim): the
+  * Exactly-once analysis (the marker-after-commit contract): the
   * marker is created AFTER `f` returns, so a crash inside `f` replays that
   * one batch on the next tick — at-least-once delivery with replay
   * suppression once markered. `f` over an idempotent sink (keyed LWW
@@ -86,8 +86,8 @@ object LakeChangeFeed {
     val p = new Path(consumerDir, f"gen-$gen%020d")
     fs.mkdirs(p.getParent)
     // a duplicate marker means a concurrent duplicate tick of the SAME gen
-    // already delivered the identical batch — benign, like the
-    // applyMergeBatchOnce race note
+    // already delivered the identical batch — benign, like
+    // BatchLedger.record's duplicate-key guard
     try fs.create(p, false).close()
     catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
   }

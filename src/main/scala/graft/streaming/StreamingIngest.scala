@@ -53,7 +53,9 @@ final case class ClosedSession(
   *    cron tick (process everything new, then stop);
   *  - `withWatermark` + `dropDuplicates` ≙ the overlap-refetch tolerance
   *    (late data within the watermark is deduped on the PK);
-  *  - `foreachBatch` → the keyed upsert sink ≙ ON CONFLICT DO UPDATE.
+  *  - the keyed upsert sink ≙ ON CONFLICT DO UPDATE: `writeStream
+  *    .format("graft-lake")` ([[graft.sources.LakeStreamSink]]) for file
+  *    targets, [[upsertJdbcExactlyOnceAvailableNow]] over JDBC.
   */
 object StreamingIngest {
 
@@ -86,9 +88,9 @@ object StreamingIngest {
     * overlap-refetch window is exactly the reference's re-delivery model,
     * so suppression within it is the whole contract. Re-deliveries arriving
     * AFTER the horizon re-emit by design (StreamingSpec pins all three
-    * behaviors); absorbing those is the keyed sink's job
-    * ([[upsertAvailableNow]]) — and the admission index's, for content
-    * identity.
+    * behaviors); absorbing those is the keyed sink's job (the `graft-lake`
+    * stream sink, [[graft.sources.LakeStreamSink]]) — and the admission
+    * index's, for content identity.
     */
   def dedupedStateBounded(
       events: DataFrame,
@@ -272,64 +274,6 @@ object StreamingIngest {
       .select(col("event_id"), col("user_id"), col("ts"), col("p_ts"), col("p_value"))
   }
 
-  /** Drain everything currently in the landing dir through the keyed
-    * parquet-merge upsert sink, then stop (AvailableNow ≙ one cron tick).
-    * Running the same tick twice converges — the sink is idempotent.
-    *
-    * With `partitionCol` set the sink is the partition-scoped merge: a
-    * micro-batch only rewrites the partitions it touches (the scale path —
-    * the column must be functionally determined by `keys`, see
-    * [[Upsert.mergePartitionedParquet]]).
-    */
-  def upsertAvailableNow(
-      deduped: DataFrame,
-      targetPath: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: Option[String] = None): StreamingQuery =
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        partitionCol match {
-          case Some(p) =>
-            Upsert.mergePartitionedParquet(
-              batch.sparkSession, targetPath, batch, keys, versionCol, p)
-          case None =>
-            Upsert.mergeIntoParquet(batch.sparkSession, targetPath, batch, keys, versionCol)
-        }
-      }
-      .start()
-
-  /** Streaming upsert into the SNAPSHOT-ISOLATED lake
-    * ([[graft.etl.SnapshotLake]]) — [[upsertAvailableNow]] with manifest
-    * commits instead of directory swaps: every micro-batch LWW-merges into
-    * new partition generations and publishes ONE atomic manifest, so
-    * concurrent readers of the maintained table always resolve a
-    * consistent snapshot (never the torn window the Hive-layout sink
-    * documents), an in-flight scan is never invalidated by the next batch,
-    * and a crash mid-batch leaves the previous snapshot readable. Replay
-    * safety is convergence, as for the Hive sink: the merge is idempotent
-    * LWW, so a re-delivered batch publishes a gen with identical content
-    * (no ledger needed — unlike the sum-fold MV lanes).
-    */
-  def snapshotMergeAvailableNow(
-      deduped: DataFrame,
-      targetPath: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: String): StreamingQuery =
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.SnapshotLake.merge(
-          batch.sparkSession, targetPath, batch, keys, versionCol, partitionCol)
-      }
-      .start()
-
   /** Streaming document admission: each micro-batch of crawled documents
     * flows through [[graft.dedup.IncrementalDedup]]'s content-hash gate —
     * only never-seen content reaches the corpus, across batches AND across
@@ -397,105 +341,13 @@ object StreamingIngest {
       }
       .start()
 
-  /** The reference's full load path, streaming: micro-batches upserted into
-    * a relational table over JDBC (`foreachBatch` → MERGE/ON CONFLICT ≙
-    * `postgres_writer.py:181-278` run per tick). Each batch is LWW-deduped
-    * before the write so a batch never carries two rows per key.
-    */
-  def upsertJdbcAvailableNow(
-      deduped: DataFrame,
-      url: String,
-      table: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      dialect: Upsert.Dialect): StreamingQuery =
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.upsertJdbc(
-          Upsert.lastWriteWins(batch, keys, versionCol), url, table, keys, dialect)
-      }
-      .start()
-
-  /** One micro-batch through the ledgered parquet-merge sink — the lake
-    * face of [[applyJdbcBatchOnce]]: marker files under
-    * `<targetPath>__batches/<sinkId>/` record applied batch ids (the
-    * file-system stand-in for the ledger table; on a real deployment this
-    * directory lives on the same shared storage as the table). Same crash
-    * analysis as the JDBC path: unmarkered replay re-merges and converges;
-    * markered replay is skipped even if the source bytes changed.
-    */
-  def applyMergeBatchOnce(
-      batch: DataFrame,
-      batchId: Long,
-      targetPath: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: Option[String] = None,
-      sinkId: String = "default"): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${targetPath}__batches/$sinkId/$batchId")
-    if (fs.exists(marker)) false
-    else {
-      partitionCol match {
-        case Some(p) =>
-          Upsert.mergePartitionedParquet(
-            batch.sparkSession, targetPath, batch, keys, versionCol, p)
-        case None =>
-          Upsert.mergeIntoParquet(
-            batch.sparkSession, targetPath, batch, keys, versionCol)
-      }
-      fs.mkdirs(marker.getParent)
-      // A concurrent duplicate attempt of the SAME batch may have markered
-      // between our exists-check and here — both applied identical data
-      // through the idempotent merge, so the race is benign (mirrors
-      // BatchLedger.record's duplicate-key guard).
-      try fs.create(marker, false).close()
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
-      true
-    }
-  }
-
-  /** [[upsertAvailableNow]] with the marker-file replay guard — exactly-once
-    * observable semantics for the lake sink.
-    */
-  def upsertExactlyOnceAvailableNow(
-      deduped: DataFrame,
-      targetPath: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: Option[String] = None,
-      sinkId: Option[String] = None): StreamingQuery = {
-    // Default identity encodes the FULL checkpoint path (sanitized for use
-    // as a directory name) — a truncated hash could collide two different
-    // streams into one marker namespace and silently suppress each other's
-    // batches. The appended hex of the raw string disambiguates paths whose
-    // sanitized forms coincide ("a/b" vs "a_b").
-    val sid = sinkId.getOrElse(
-      checkpoint.replaceAll("[^A-Za-z0-9_.-]", "_") + "-" +
-        java.lang.Integer.toHexString(checkpoint.hashCode))
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMergeBatchOnce(batch, batchId, targetPath, keys, versionCol,
-          partitionCol, sid)
-        ()
-      }
-      .start()
-  }
-
   /** One micro-batch folded into t19's persisted vocab-state MV (the
     * streaming face of the text lane's e12; see
     * [[graft.text.TextQueries.t19IncrementalVocab]]). Sum-merge is NOT
     * idempotent — re-folding a batch double-counts — so the replay marker
-    * cannot be written AFTER the data commit the way [[applyMergeBatchOnce]]'s
-    * can (that crash window is benign only under idempotent LWW merges).
+    * cannot be written AFTER the data commit the way
+    * [[graft.etl.SnapshotLake.mergeStreamBatch]]'s can (that crash window is
+    * benign only under idempotent LWW merges).
     * Here the marker is written INTO the staged state directory and
     * published by the SAME atomic rename that publishes the merged counts:
     * state and fold-ledger commit together, so a replay after any crash
@@ -503,7 +355,8 @@ object StreamingIngest {
     * or sees the marker and skips. (`__applied/` is underscore-prefixed, so
     * Spark's source listing hides it from the parquet read.) Crash between
     * the two swap renames parks the state at `__old`; the recovery preamble
-    * restores it and the refold rebuilds the same staging. Lease-guarded
+    * ([[Upsert.recoverSwap]]) restores it and the refold rebuilds the same
+    * staging. Lease-guarded
     * like every rename-based lake mutation. Returns whether the batch was
     * folded (false = replay suppressed).
     */
@@ -618,9 +471,10 @@ object StreamingIngest {
       val cur = new org.apache.hadoop.fs.Path(statePath)
       val fs = cur.getFileSystem(conf)
       val old = new org.apache.hadoop.fs.Path(statePath + "__old")
+      val staging = new org.apache.hadoop.fs.Path(statePath + "__staging")
       // crashed between the swap renames: restore the parked state — the
       // marker was never published, so the refold below rebuilds staging
-      if (!fs.exists(cur) && fs.exists(old)) Upsert.renameOrThrow(fs, old, cur)
+      Upsert.recoverSwap(fs, cur, old, staging)
       val marker = new org.apache.hadoop.fs.Path(cur, s"__applied/$sinkId/$batchId")
       if (fs.exists(marker)) false
       else {
@@ -628,8 +482,6 @@ object StreamingIngest {
         val merged =
           if (fs.exists(cur)) merge(s.read.parquet(statePath), batchState)
           else batchState
-        val staging = new org.apache.hadoop.fs.Path(statePath + "__staging")
-        if (fs.exists(staging)) fs.delete(staging, true)
         merged.write.mode("overwrite").parquet(staging.toString)
         // carry every already-applied marker forward, then add this batch's —
         // all published atomically by the staging→cur rename below
@@ -646,10 +498,7 @@ object StreamingIngest {
         val dst = new org.apache.hadoop.fs.Path(staging, s"__applied/$sinkId/$batchId")
         fs.mkdirs(dst.getParent)
         fs.create(dst, false).close()
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(cur)) Upsert.renameOrThrow(fs, cur, old)
-        Upsert.renameOrThrow(fs, staging, cur)
-        fs.delete(old, true)
+        Upsert.installSwap(fs, cur, staging, old)
         true
       }
     }
@@ -748,10 +597,14 @@ object StreamingIngest {
     }
   }
 
-  /** [[upsertJdbcAvailableNow]] with the [[BatchLedger]] replay guard —
-    * exactly-once observable semantics instead of at-least-once-converging.
-    * `sinkId` defaults to `table@checkpoint` (batch ids are only unique per
-    * checkpoint lineage).
+  /** The reference's full load path, streaming: micro-batches upserted into
+    * a relational table over JDBC (≙ `postgres_writer.py:181-278` run per
+    * tick), each through [[applyJdbcBatchOnce]] — LWW-dedup, keyed MERGE,
+    * then the [[BatchLedger]] replay guard: exactly-once observable
+    * semantics instead of at-least-once-converging. `sinkId` defaults to
+    * `table@checkpoint` (batch ids are only unique per checkpoint lineage),
+    * so a fresh checkpoint's full re-delivery is a new ledger lineage that
+    * converges through the MERGE.
     */
   def upsertJdbcExactlyOnceAvailableNow(
       deduped: DataFrame,

@@ -323,6 +323,61 @@ class EtlSpec extends SparkSuite {
     assert(!JFiles.exists(Paths.get(dir + "__old")))
   }
 
+  test("E3: first partition merge refuses a null partition value and creates no table") {
+    import java.nio.file.{Files => JFiles, Paths}
+    val dir = Files.createTempDirectory("graft_pnull").toString + "/quotes"
+    val e = intercept[IllegalArgumentException] {
+      Upsert.mergePartitionedParquet(spark, dir,
+        Seq(("k1", "2025-01-01", 1L, 1.0), ("k2", null: String, 1L, 2.0))
+          .toDF("key", "dt", "v", "price"),
+        Seq("key"), "v", "dt")
+    }
+    assert(e.getMessage.contains("null"))
+    assert(!JFiles.exists(Paths.get(dir)),
+      "a refused first batch must not leave a __HIVE_DEFAULT_PARTITION__ table behind")
+    // an empty first batch still creates the table
+    Upsert.mergePartitionedParquet(spark, dir,
+      Seq.empty[(String, String, Long, Double)].toDF("key", "dt", "v", "price"),
+      Seq("key"), "v", "dt")
+    assert(JFiles.exists(Paths.get(dir)))
+  }
+
+  test("E3: rename-swap pair restores a lone park, drops a stale one, clears stale staging") {
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("graft_swap").toString
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one case per name: its live dir, park and staging dir
+    def dirs(name: String): Seq[Path] =
+      Seq("", "__old", "__staging").map(s => new Path(s"$root/$name$s"))
+    def put(dir: Path, file: String): Unit = fs.create(new Path(dir, file)).close()
+    def files(dir: Path): Set[String] = fs.listStatus(dir)
+      .map(_.getPath.getName).filterNot(_.startsWith(".")).toSet
+
+    // parked copy, live dir missing: the park is the only copy — restored
+    val Seq(live1, parked1, staging1) = dirs("a")
+    put(parked1, "old")
+    Upsert.recoverSwap(fs, live1, parked1, staging1)
+    assert(files(live1) == Set("old") && !fs.exists(parked1))
+
+    // parked copy and live dir both present: the install completed — the
+    // park is dropped, the live dir kept
+    val Seq(live2, parked2, staging2) = dirs("b")
+    put(live2, "new"); put(parked2, "old")
+    Upsert.recoverSwap(fs, live2, parked2, staging2)
+    assert(files(live2) == Set("new") && !fs.exists(parked2))
+
+    // no park, stale staging left before an install: cleared; the next
+    // install parks the live dir, swaps the staging in and drops the park
+    val Seq(live3, parked3, staging3) = dirs("c")
+    put(live3, "old"); put(staging3, "stale")
+    Upsert.recoverSwap(fs, live3, parked3, staging3)
+    assert(files(live3) == Set("old") && !fs.exists(staging3))
+    put(staging3, "new")
+    Upsert.installSwap(fs, live3, staging3, parked3)
+    assert(files(live3) == Set("new"))
+    assert(!fs.exists(staging3) && !fs.exists(parked3))
+  }
+
   test("E3: partition merge rejects legacy unpartitioned layout; preserves string shards") {
     import java.nio.file.{Files => JFiles, Paths}
     val root = Files.createTempDirectory("graft_pmisc").toString

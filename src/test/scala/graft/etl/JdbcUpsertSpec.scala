@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSuite, Tables}
 
 /** End-to-end L2/L3 proof against a real JDBC database: the distributed
-  * `foreachPartition` upsert sink (reference `postgres_writer.py:181-278`
+  * upsert sink (reference `postgres_writer.py:181-278`
   * semantics) run against embedded Derby, which executes a genuine
   * `MERGE` per row batch. Covers: batching, per-partition transactions,
   * insert-vs-update paths, and idempotent re-runs.
@@ -51,8 +51,10 @@ class JdbcUpsertSpec extends SparkSuite {
     Upsert.upsertJdbc(batch, url, "events_latest", Seq("user_id", "event_type"), Upsert.Derby)
     assert(query1("SELECT COUNT(*), 0.0 FROM events_latest")._1 == expected)
 
-    // conflicting re-delivery takes the update path (DO UPDATE semantics)
-    Upsert.upsertJdbc(batch.withColumn("value", lit(-1.0)),
+    // conflicting re-delivery takes the update path (DO UPDATE semantics);
+    // its ts arrives as TIMESTAMP_NTZ, which binds like TIMESTAMP
+    Upsert.upsertJdbc(batch.withColumn("value", lit(-1.0))
+        .withColumn("ts", col("ts").cast("timestamp_ntz")),
       url, "events_latest", Seq("user_id", "event_type"), Upsert.Derby)
     val (n, mx) = query1("""SELECT COUNT(*), MAX("value") FROM events_latest""")
     assert(n == expected)

@@ -223,13 +223,16 @@ class SnapshotLakeSpec extends SparkSuite {
     val landing = Files.createTempDirectory("graft_snaplake_landing").toString
     b1.unionByName(b2).repartition(3).write.mode("overwrite").parquet(landing)
     val schema = spark.read.parquet(landing).schema
-    def tick(n: Int): Unit = {
-      val stream = spark.readStream.schema(schema)
+    SnapshotLake.create(spark, dir, schema,
+      SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil))
+    def tick(n: Int): Unit =
+      spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(landing)
-      graft.streaming.StreamingIngest.snapshotMergeAvailableNow(
-        stream, dir, s"$landing/ckpt_$n", Seq("key"), "v", "dt")
-        .awaitTermination()
-    }
+        .writeStream.format("graft-lake")
+        .option("path", dir)
+        .option("checkpointLocation", s"$landing/ckpt_$n")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
     tick(1) // >= 3 micro-batches, each one manifest commit
     val want = Map("k1" -> ((2L, 15.0)), "k2" -> ((1L, 20.0)),
       "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0)))

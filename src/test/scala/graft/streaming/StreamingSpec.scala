@@ -483,13 +483,15 @@ class StreamingSpec extends SparkSuite {
     def tick(n: Int): Unit = {
       val stream = StreamingIngest.readLanding(spark, landing, schema)
         .select(col("event_id"), col("ts"), col("value"))
-      StreamingIngest.upsertJdbcAvailableNow(
+      StreamingIngest.upsertJdbcExactlyOnceAvailableNow(
         stream, url, "stream_quotes", s"$work/ckpt_jdbc_$n",
         Seq("event_id"), "ts", graft.etl.Upsert.Derby).awaitTermination()
     }
 
     tick(1)
-    tick(2) // fresh checkpoint ⇒ full re-delivery; the MERGE absorbs it
+    // fresh checkpoint ⇒ fresh ledger lineage ⇒ full re-delivery reaches
+    // the MERGE, which absorbs it
+    tick(2)
     val c2 = java.sql.DriverManager.getConnection(url)
     val r = c2.createStatement().executeQuery("SELECT COUNT(*) FROM stream_quotes")
     r.next()
@@ -502,22 +504,27 @@ class StreamingSpec extends SparkSuite {
   test("watermark dedup + AvailableNow upsert sink converge across re-delivery") {
     val schema = spark.read.parquet(landing).schema
     val target = s"$work/target"
+    // the lake partitions by a bucket of the key, so every key lives in
+    // exactly one partition
+    def deduped() = StreamingIngest.dedupedWithinWatermark(
+        StreamingIngest.readLanding(spark, landing, schema), "ts", "2 days", Seq("event_id"))
+      .withColumn("bucket", pmod(col("event_id"), lit(8L)))
+    graft.etl.SnapshotLake.create(spark, target, deduped().schema,
+      graft.etl.SnapshotLake.MergeSpec(Seq("event_id"), "ts", "bucket", Nil, Nil))
 
-    def tick(n: Int): Unit = {
-      val stream = StreamingIngest.readLanding(spark, landing, schema)
-      val deduped = StreamingIngest.dedupedWithinWatermark(
-        stream, "ts", "2 days", Seq("event_id"))
-      val q = StreamingIngest.upsertAvailableNow(
-        deduped, target, s"$work/ckpt_upsert_$n", Seq("event_id"), "ts")
-      q.awaitTermination()
-    }
+    def tick(n: Int): Unit =
+      deduped().writeStream.format("graft-lake")
+        .option("path", target)
+        .option("checkpointLocation", s"$work/ckpt_upsert_$n")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
 
     tick(1)
-    val after1 = spark.read.parquet(target).count()
+    val after1 = graft.etl.SnapshotLake.read(spark, target).count()
     // fresh checkpoint ⇒ full re-delivery of the same landing data ≙ the
     // reference's overlapping 2-day refetch; the keyed sink absorbs it
     tick(2)
-    val after2 = spark.read.parquet(target).count()
+    val after2 = graft.etl.SnapshotLake.read(spark, target).count()
     val expected = spark.read.parquet(landing).select("event_id").distinct().count()
     assert(after1 == expected)
     assert(after2 == expected, "re-delivered tick must converge, not duplicate")
@@ -573,29 +580,29 @@ class StreamingSpec extends SparkSuite {
 
   test("exactly-once parquet sink: marker files suppress re-applied batches") {
     import spark.implicits._
+    import graft.etl.SnapshotLake
     val target = s"$work/xo_lake"
     def batch(rows: Seq[(String, Long, Double)]) =
       rows.toDF("key", "v", "price")
+    SnapshotLake.create(spark, target, batch(Nil).schema,
+      SnapshotLake.MergeSpec(Seq("key"), "v", "key", Nil, Nil))
+    def state() = SnapshotLake.read(spark, target).collect()
+      .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
     // batch 0 applies and is markered
-    assert(StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k1", 1L, 10.0), ("k2", 1L, 20.0))), 0L, target,
-      Seq("key"), "v", sinkId = "lake"))
+    assert(SnapshotLake.mergeStreamBatch(spark, target,
+      batch(Seq(("k1", 1L, 10.0), ("k2", 1L, 20.0))), "lake", 0L))
     // a replay of batch 0 with CHANGED bytes must be suppressed
-    assert(!StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k1", 1L, 99.0))), 0L, target, Seq("key"), "v", sinkId = "lake"))
-    val s1 = spark.read.parquet(target).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(s1 == Map("k1" -> 10.0, "k2" -> 20.0))
+    assert(!SnapshotLake.mergeStreamBatch(spark, target,
+      batch(Seq(("k1", 1L, 99.0))), "lake", 0L))
+    assert(state() == Map("k1" -> 10.0, "k2" -> 20.0))
     // a NEW batch id applies normally
-    assert(StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k2", 2L, 25.0), ("k3", 1L, 30.0))), 1L, target,
-      Seq("key"), "v", sinkId = "lake"))
-    val s2 = spark.read.parquet(target).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(s2 == Map("k1" -> 10.0, "k2" -> 25.0, "k3" -> 30.0))
+    assert(SnapshotLake.mergeStreamBatch(spark, target,
+      batch(Seq(("k2", 2L, 25.0), ("k3", 1L, 30.0))), "lake", 1L))
+    assert(state() == Map("k1" -> 10.0, "k2" -> 25.0, "k3" -> 30.0))
     // a different sink id has its own ledger namespace
-    assert(StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k4", 1L, 40.0))), 0L, target, Seq("key"), "v", sinkId = "other"))
+    assert(SnapshotLake.mergeStreamBatch(spark, target,
+      batch(Seq(("k4", 1L, 40.0))), "other", 0L))
+    assert(state() == Map("k1" -> 10.0, "k2" -> 25.0, "k3" -> 30.0, "k4" -> 40.0))
   }
 
   test("exactly-once JDBC sink: batch replayed after commit-log loss is skipped") {
